@@ -2,7 +2,7 @@
 """Run the benchmark on several seeds and summarize each metric.
 
     python3 perfbench/baseline.py --workloads tracts counties network \\
-        --seeds 1-10 [--trace 0] [--json out.json]
+        --seeds 1-10 [--trace 0]
 
 For every workload and metric it prints the median, the quartiles
 (``statistics.quantiles(values, n=4)``) and the spread (Q3 - Q1) as a
@@ -36,10 +36,8 @@ def main() -> int:
     ap.add_argument("--workloads", nargs="+", default=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--trace", type=int, default=0)
-    ap.add_argument("--json")
     args = ap.parse_args()
     bounds = {m["name"]: m.get("bound") for m in bench["end_to_end"]}
-    summary = {}
     for w in args.workloads:
         values: dict = {}
         for s in seeds(args.seeds):
@@ -52,18 +50,13 @@ def main() -> int:
                              if k in bounds), flush=True)
             for k, v in res["metrics"].items():
                 values.setdefault(k, []).append(v["value"])
-        summary[w] = {}
         for k, vals in values.items():
             q1, _, q3 = statistics.quantiles(vals, n=4)
             med = statistics.median(vals)
             spread = (q3 - q1) / med if med else float("nan")
-            summary[w][k] = {"median": med, "q1": q1, "q3": q3, "spread": spread, "n": len(vals)}
             if k in bounds or args.trace:
                 print(f"  {w} {k}: median {med:.4g} q1 {q1:.4g} q3 {q3:.4g} "
                       f"spread {spread:.3f} bound {bounds.get(k)}", flush=True)
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump(summary, f, indent=1)
     return 0
 
 

@@ -36,8 +36,6 @@ SIZES = {
     "network": {"edges": 6_000, "points": 3_000},
 }
 
-KEEP_FIXTURES = 6  # most recently used fixture sets kept in the cache
-
 
 # -- WKB writers (little endian, 2-D) ------------------------------------------
 
@@ -421,14 +419,12 @@ def fixture(cache_dir: str, workload: str, seed: int) -> tuple[dict, dict, dict]
     with open(__file__, "rb") as f:  # the generator's code is part of the key
         code = f.read()
     size_key = hashlib.sha256(json.dumps(SIZES[workload], sort_keys=True).encode() + code).hexdigest()[:10]
-    root = os.path.join(cache_dir, "fixtures")
-    d = os.path.join(root, f"{workload}-s{seed}-{size_key}")
+    d = os.path.join(cache_dir, "fixtures", f"{workload}-s{seed}-{size_key}")
     man_path = os.path.join(d, "manifest.json")
     if os.path.exists(man_path):
         with open(man_path) as f:
             man = json.load(f)
         if all(_sha256(os.path.join(d, fn)) == h for fn, h in man["sha256"].items()):
-            os.utime(d)
             with np.load(os.path.join(d, "truth.npz")) as z:
                 truth = dict(z)
             return {t: os.path.join(d, f"{t}.parquet") for t in man["tables"]}, truth, man
@@ -450,12 +446,5 @@ def fixture(cache_dir: str, workload: str, seed: int) -> tuple[dict, dict, dict]
         json.dump(man, f, indent=1)
     shutil.rmtree(d, ignore_errors=True)
     os.replace(tmp, d)
-    _evict(root)
     return {t: os.path.join(d, f"{t}.parquet") for t in tables}, truth, man
 
-
-def _evict(root: str) -> None:
-    sets = [os.path.join(root, e) for e in os.listdir(root) if ".tmp" not in e]
-    sets.sort(key=os.path.getmtime, reverse=True)
-    for old in sets[KEEP_FIXTURES:]:
-        shutil.rmtree(old, ignore_errors=True)

@@ -28,13 +28,15 @@ counts as a failed operation.
 session with the local event log on and, after set-up, runs one
 untraced pass, one traced pass with one span (and Spark job group) per
 operation, and the per-layer probes; it prints the per-layer metrics
-folded from the event log and /proc.  Exact counts must repeat from one traced run of a
-fixture to the next.  The last line of stdout is one JSON object.
+folded from the event log and /proc.  Exact counts must repeat from one
+traced run of the same code on a fixture to the next.  The last line of
+stdout is one JSON object.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import hashlib
 import json
 import os
@@ -65,7 +67,8 @@ PROBES = (
 # per-layer names whose values are exact counts; every other one is a timing or size
 COUNTS = {f"{layer}.{f}" for layer in LAYERS for f in ("jobs", "stages", "tasks", "tasks_failed", "rows_out")} | {
     "geom_batch.cover_cells", "geom_batch.clip_pairs"}
-# counts that must repeat exactly from one traced run of a fixture to the next
+# counts that must repeat exactly from one traced run of the same code on a
+# fixture to the next
 EXACT = {f"{layer}.{f}" for layer in LAYERS for f in ("jobs", "tasks", "rows_out")} | {
     "geom_batch.cover_cells", "geom_batch.clip_pairs"}
 UNITS = {"edges_per_s": "edges/s", "points_per_s": "points/s",
@@ -245,10 +248,8 @@ def probe_layers(bench, spark, tracer) -> dict:
             zc.append(hit)
         ec, zc = np.concatenate(ec), np.concatenate(zc)
         t0 = time.perf_counter()
-        totals = GB.clip_pairs_totals(elines, ec, zpolys, zc)
+        GB.clip_pairs_totals(elines, ec, zpolys, zc)
         m["geom_batch.clip_s"] = time.perf_counter() - t0
-        m["geom_batch.clip_pairs"] = len(ec)
-        m["geom_batch.clip_kept_ratio"] = float(np.mean(totals > 0)) if len(ec) else 0.0
 
     if bench.workload == "counties":
         zl = list(zip(zones.ids, zpolys))
@@ -272,28 +273,50 @@ def probe_layers(bench, spark, tracer) -> dict:
     return m
 
 
-def fold_layers(tracer, groups) -> dict:
+def fold_layers(tracer, groups, workload: str) -> dict:
     """Each operator span's event-log and /proc row as ``<layer>.<field>``;
-    layers the workload does not run read 0."""
+    layers the workload does not run read 0.  Where the lines call takes
+    the cell-join path, the rows into and out of its written clip kernel
+    are the program's candidate pairs and kept pairs."""
     import tracing
 
     m = {f"{layer}.{f}": 0 for layer in LAYERS for f in LAYER_FIELDS}
     for sp in tracer.spans:
         if sp["name"] in LAYERS:
             m.update({f"{sp['name']}.{f}": v for f, v in tracing.fold_span(sp, groups).items()})
+        # tracts' lines call takes the cell-join path, whose clip kernel
+        # receives (edge, zone) candidate pairs
+        if sp["name"] == "intersect" and workload == "tracts":
+            rec = groups.get(sp["group"]) or tracing.group_totals()
+            pairs = rec["kernel_rows_in"]
+            m["geom_batch.clip_pairs"] = pairs
+            m["geom_batch.clip_kept_ratio"] = rec["kernel_rows_out"] / pairs if pairs else 0.0
     return m
 
 
+def code_hash() -> str:
+    """Hash of the package's and the benchmark's Python source."""
+    h = hashlib.sha256()
+    for sub in ("osm_chordify_spark", "perfbench"):
+        for path in sorted(glob.glob(os.path.join(ROOT, sub, "**", "*.py"), recursive=True)):
+            h.update(os.path.relpath(path, ROOT).encode())
+            with open(path, "rb") as f:
+                h.update(hashlib.sha256(f.read()).digest())
+    return h.hexdigest()
+
+
 def check_counts_repeat(bench, metrics: dict) -> list:
-    """Exact counts must also repeat across traced runs of one fixture."""
-    key = hashlib.sha256(json.dumps(bench.manifest["sha256"], sort_keys=True).encode()).hexdigest()[:16]
+    """Exact counts must repeat across traced runs of the same code on one
+    fixture; changed code starts a fresh record."""
+    key = hashlib.sha256(json.dumps(bench.manifest["sha256"], sort_keys=True).encode()
+                         + code_hash().encode()).hexdigest()[:16]
     path = os.path.join(CACHE, "counts", f"{bench.workload}-{key}.json")
     now = {k: metrics[k] for k in sorted(EXACT)}
     if os.path.exists(path):
         with open(path) as f:
             before = json.load(f)
         diff = [k for k in now if before.get(k) != now[k]]
-        return [f"counts differ from the previous traced run: {diff}"] if diff else []
+        return [f"counts differ from the previous traced run of this code and fixture: {diff}"] if diff else []
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(now, f, indent=1)
@@ -331,7 +354,7 @@ def fold_trace(bench, metrics, tracer, log_dir) -> dict:
 
     groups = tracing.read_event_log(tracing.event_log_file(log_dir))
     shutil.rmtree(log_dir, ignore_errors=True)
-    metrics.update(fold_layers(tracer, groups))
+    metrics.update(fold_layers(tracer, groups, bench.workload))
     bench.errors.extend(check_counts_repeat(bench, metrics))
     return metrics
 

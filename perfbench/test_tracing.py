@@ -48,6 +48,10 @@ def test_fold_known_job():
         def ident(batches):
             yield from batches
 
+        def evens(batches):
+            for pdf in batches:
+                yield pdf[pdf["id"] % 2 == 0]
+
         with tracer.span("known"):
             # 4 map tasks -> shuffle -> 3 reduce tasks writing 7 rows
             df = (spark.range(0, 1000, 1, 4).mapInPandas(ident, "id long")
@@ -55,10 +59,14 @@ def test_fold_known_job():
             df.write.mode("overwrite").parquet(os.path.join(work, "out"))
         with tracer.span("idle"):
             pass
+        with tracer.span("kernel"):
+            # the write consumes the Python kernel directly: 1000 rows in, 500 out
+            (spark.range(0, 1000, 1, 2).mapInPandas(evens, "id long")
+             .write.mode("overwrite").parquet(os.path.join(work, "evens")))
     finally:
         spark.stop()
     groups = tracing.read_event_log(tracing.event_log_file(log_dir))
-    known, idle = (tracing.fold_span(s, groups) for s in tracer.spans)
+    known, idle, kernel = (tracing.fold_span(s, groups) for s in tracer.spans)
     assert known["jobs"] == 1
     assert known["stages"] == 2
     assert known["tasks"] == 7
@@ -68,4 +76,9 @@ def test_fold_known_job():
     assert known["python_mb"] > 0 and known["python_run_s"] > 0
     assert 0 <= known["driver_s"] < known["wall_s"]
     assert idle["jobs"] == idle["tasks"] == 0 and idle["driver_s"] == idle["wall_s"]
+    assert kernel["rows_out"] == 500
+    rows = {sp["name"]: (groups[sp["group"]]["kernel_rows_in"], groups[sp["group"]]["kernel_rows_out"])
+            for sp in tracer.spans if sp["group"] in groups}
+    # the aggregate's write does not consume a Python kernel directly
+    assert rows == {"known": (0, 0), "kernel": (1000, 500)}
     shutil.rmtree(work, ignore_errors=True)

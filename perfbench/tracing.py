@@ -80,27 +80,20 @@ def tree_rss(tree: dict) -> int:
 
 
 class RssSampler:
-    """Background sampler of the summed RSS of this process tree.  The
-    tree is re-discovered every ``rescan`` samples; in between only the
-    known processes are read."""
+    """Background sampler of the summed RSS of this process tree, read
+    every ``INTERVAL`` seconds."""
 
-    def __init__(self, interval: float = 0.1, rescan: int = 10):
-        self.interval, self.rescan = interval, rescan
+    INTERVAL = 0.1
+
+    def __init__(self):
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _loop(self):
-        pids, n = [], 0
         while not self._stop.is_set():
-            if n % self.rescan == 0:
-                tree = process_tree()
-                pids = list(tree)
-            else:
-                tree = {p: st for p in pids if (st := _stat(p)) is not None}
-            self.peak = max(self.peak, tree_rss(tree))
-            n += 1
-            self._stop.wait(self.interval)
+            self.peak = max(self.peak, tree_rss(process_tree()))
+            self._stop.wait(self.INTERVAL)
 
     def __enter__(self):
         self._thread.start()
@@ -159,32 +152,42 @@ def _acc(task_info: dict, name: str) -> float:
     return total
 
 
-def _group_totals() -> dict:
+def group_totals() -> dict:
     return {
         "jobs": [], "stages": set(), "tasks": 0, "tasks_failed": 0, "exec_cpu_s": 0.0,
         "gc_s": 0.0, "python_run_s": 0.0, "python_bytes": 0.0, "shuffle_write_bytes": 0.0,
-        "spill_bytes": 0.0, "rows_out": 0,
+        "spill_bytes": 0.0, "rows_out": 0, "executions": set(),
+        "kernel_rows_in": 0, "kernel_rows_out": 0,
     }
 
 
 def read_event_log(path: str) -> dict:
-    """Per job group: job intervals, stages run, and task totals."""
+    """Per job group: job intervals, stages run, task totals, and the
+    rows into and out of each written result's final Python kernel
+    (``written_kernel``)."""
     groups: dict = {}
     job_group: dict = {}
     stage_group: dict = {}
+    plans: dict = {}  # SQL execution id -> its latest (adaptive) plan
+    accums: dict = {}  # accumulator id -> sum of its task updates
 
     def g(name):
-        return groups.setdefault(name, _group_totals())
+        return groups.setdefault(name, group_totals())
 
     with open(path) as f:
         for line in f:
             ev = json.loads(line)
             kind = ev.get("Event")
-            if kind == "SparkListenerJobStart":
-                grp = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+            if kind.endswith(("SQLExecutionStart", "SQLAdaptiveExecutionUpdate")):
+                plans[ev["executionId"]] = ev["sparkPlanInfo"]
+            elif kind == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                grp = props.get("spark.jobGroup.id")
                 if grp:
                     job_group[ev["Job ID"]] = grp
                     g(grp)["jobs"].append([ev["Job ID"], ev["Submission Time"] / 1e3, None])
+                    if props.get("spark.sql.execution.id") is not None:
+                        g(grp)["executions"].add(int(props["spark.sql.execution.id"]))
             elif kind == "SparkListenerJobEnd":
                 grp = job_group.get(ev["Job ID"])
                 if grp:
@@ -199,12 +202,17 @@ def read_event_log(path: str) -> dict:
                     stage_group[key[0]] = grp
                     g(grp)["stages"].add(key)
             elif kind == "SparkListenerTaskEnd":
+                info = ev.get("Task Info") or {}
+                for a in info.get("Accumulables", ()):
+                    try:
+                        accums[a["ID"]] = accums.get(a["ID"], 0) + float(a["Update"])
+                    except (KeyError, TypeError, ValueError):
+                        pass
                 grp = stage_group.get(ev["Stage ID"])
                 if not grp:
                     continue
                 rec = g(grp)
                 rec["tasks"] += 1
-                info = ev.get("Task Info") or {}
                 if info.get("Failed") or (ev.get("Task End Reason") or {}).get("Reason") != "Success":
                     rec["tasks_failed"] += 1
                 m = ev.get("Task Metrics") or {}
@@ -216,7 +224,51 @@ def read_event_log(path: str) -> dict:
                 rec["rows_out"] += (m.get("Output Metrics") or {}).get("Records Written", 0)
                 rec["python_run_s"] += _acc(info, _PY_TIME) / 1e3  # ms
                 rec["python_bytes"] += _acc(info, _PY_SENT) + _acc(info, _PY_RECV)
+    for rec in groups.values():
+        for ex in rec["executions"]:
+            rows = written_kernel(plans.get(ex), accums)
+            if rows:
+                rec["kernel_rows_in"] += rows[0]
+                rec["kernel_rows_out"] += rows[1]
     return groups
+
+
+_OUT_ROWS = "number of output rows"
+
+
+def _metric_ids(node: dict) -> dict:
+    return {m["name"]: m["accumulatorId"] for m in node.get("metrics", ())}
+
+
+def _rows_out(node: dict, accums: dict) -> int:
+    """Rows a plan node emits: its own row metric, or, for a node without
+    one (project, sort, exchange, codegen wrapper), the sum over its
+    children."""
+    ids = _metric_ids(node)
+    if _OUT_ROWS in ids:
+        return int(accums.get(ids[_OUT_ROWS], 0))
+    return sum(_rows_out(c, accums) for c in node["children"])
+
+
+def written_kernel(plan, accums: dict):
+    """(rows in, rows out) of the Python kernel whose output a file write
+    consumes directly, or None.  Nodes between the write and the kernel
+    must pass rows through unchanged (no row metric of their own)."""
+    todo = [plan] if plan else []
+    while todo:
+        node = todo.pop()
+        if node["nodeName"].startswith("Execute InsertIntoHadoopFsRelationCommand"):
+            below = node["children"]
+            while len(below) == 1:
+                ids = _metric_ids(below[0])
+                if _PY_TIME in ids:
+                    rows_in = sum(_rows_out(c, accums) for c in below[0]["children"])
+                    return rows_in, int(accums.get(ids[_OUT_ROWS], 0))
+                if _OUT_ROWS in ids:
+                    break
+                below = below[0]["children"]
+        todo.extend(node["children"])
+    return None
 
 
 def covered(intervals, t0: float, t1: float) -> float:
@@ -232,7 +284,7 @@ def covered(intervals, t0: float, t1: float) -> float:
 
 def fold_span(span: dict, groups: dict) -> dict:
     """One span's per-layer row from its job group's event-log totals."""
-    rec = groups.get(span["group"]) or _group_totals()
+    rec = groups.get(span["group"]) or group_totals()
     wall = span["t1"] - span["t0"]
     job_iv = [(a, b if b is not None else span["t1"]) for _, a, b in rec["jobs"]]
     c0, c1 = span["cpu0"], span["cpu1"]
