@@ -4,10 +4,10 @@
     python3 perfbench/baseline.py --workloads tracts counties network \\
         --seeds 1-10 [--trace 0]
 
-For every workload and metric it prints the median, the quartiles
-(``statistics.quantiles(values, n=4)``) and the spread (Q3 - Q1) as a
-share of the median, next to the metric's bound from BENCHMARK.json.
-Runs go one at a time.
+Each run prints its wall time.  For every workload and metric it prints
+the median, the quartiles (``statistics.quantiles(values, n=4)``) and
+the spread (Q3 - Q1) as a share of the median, next to the metric's
+bound from BENCHMARK.json.  Runs go one at a time.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ import os
 import statistics
 import subprocess
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,9 +44,12 @@ def main() -> int:
         for s in seeds(args.seeds):
             cmd = [*bench["command"], "--workload", w, "--seed", str(s),
                    "--seconds", str(bench["run_seconds"]), "--trace", str(args.trace)]
+            t0 = time.perf_counter()
             out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=900)
+            wall = time.perf_counter() - t0
             res = json.loads(out.stdout.strip().splitlines()[-1])
-            print(f"{w} seed {s}: correct={res['correct']} failed={res['failed']}/{res['attempted']} "
+            print(f"{w} seed {s}: wall={wall:.1f}s correct={res['correct']} "
+                  f"failed={res['failed']}/{res['attempted']} "
                   + " ".join(f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()
                              if k in bounds), flush=True)
             for k, v in res["metrics"].items():

@@ -174,6 +174,32 @@ def start_spark(extra_conf=None):
     return spark, time.perf_counter() - t0
 
 
+def stop_spark() -> None:
+    """Stop the session, end the JVM it runs in and wait until it and
+    every process it started (the Python workers) have exited: left to
+    itself the JVM outlives this process by seconds."""
+    import subprocess
+
+    import tracing
+    from pyspark import SparkContext
+
+    started = set(tracing.process_tree()) - {os.getpid()}
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        started |= set(tracing.process_tree()) - {os.getpid()}
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is not None:
+            proc.stdin.close()  # the JVM exits on EOF of its stdin
+            try:
+                proc.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        tracing.wait_ended(started)
+
+
 def measure(bench, ops, seconds: float, tracer=None) -> list:
     """Whole passes until ``seconds`` are used, at least one."""
     passes, t0 = [], time.perf_counter()
@@ -381,8 +407,8 @@ def main() -> int:
     if args.trace:
         os.makedirs(log_dir, exist_ok=True)
     with tracing.RssSampler() as rss:
-        spark, start_s = start_spark(event_log_conf(log_dir) if args.trace else None)
         try:
+            spark, start_s = start_spark(event_log_conf(log_dir) if args.trace else None)
             ops = workloads.operations(args.workload, spark, bench.fx, bench.rows)
             warm = sum(bench.run_op(op) for op in ops)
             setup_s = boot_s + start_s + warm
@@ -393,7 +419,7 @@ def main() -> int:
             else:
                 metrics = end_to_end(ops, setup_s, measure(bench, ops, args.seconds))
         finally:
-            spark.stop()
+            stop_spark()
     # peak RSS swings by a third between runs (JVM heap sizing), too much
     # for a bounded end-to-end metric: it is reported on the
     # human-readable lines and as a per-layer metric

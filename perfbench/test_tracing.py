@@ -15,6 +15,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path[:0] = [ROOT, HERE]
 
+import run  # noqa: E402
 import tracing  # noqa: E402
 
 
@@ -64,7 +65,7 @@ def test_fold_known_job():
             (spark.range(0, 1000, 1, 2).mapInPandas(evens, "id long")
              .write.mode("overwrite").parquet(os.path.join(work, "evens")))
     finally:
-        spark.stop()
+        run.stop_spark()
     groups = tracing.read_event_log(tracing.event_log_file(log_dir))
     known, idle, kernel = (tracing.fold_span(s, groups) for s in tracer.spans)
     assert known["jobs"] == 1

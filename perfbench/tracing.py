@@ -79,6 +79,35 @@ def tree_rss(tree: dict) -> int:
     return sum(st[4] for st in tree.values())
 
 
+def _running(pid: int) -> bool:
+    """True while ``pid`` exists and has not exited (a zombie has)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            raw = f.read()
+    except OSError:
+        return False
+    return raw[raw.rindex(")") + 2] != "Z"
+
+
+def wait_ended(pids, timeout: float = 30.0) -> None:
+    """Wait until every process in ``pids`` has ended; SIGKILL those
+    still running after ``timeout`` seconds and wait for them too."""
+    import signal
+
+    deadline = time.monotonic() + timeout
+    left = {p for p in pids if _running(p)}
+    while left:
+        if time.monotonic() > deadline:
+            for p in left:
+                try:
+                    os.kill(p, signal.SIGKILL)
+                except OSError:
+                    pass
+            deadline = float("inf")
+        time.sleep(0.05)
+        left = {p for p in left if _running(p)}
+
+
 class RssSampler:
     """Background sampler of the summed RSS of this process tree, read
     every ``INTERVAL`` seconds."""
