@@ -21,12 +21,17 @@ point-distance / point-in-polygon / segment-rect queries for MANY
 * per-query reductions use ``np.minimum.reduceat`` (min is exact, so
   reduction order cannot perturb results) and integer winding sums.
 
+Cover classification (``zone_cover_cells_batch``) is segment-driven:
+each ring segment is paired only with the cover cells and cover rows
+its padded bbox reaches, so its cost grows with segments + cells, not
+segments × cells.
+
 Degenerate rings (< 2 distinct closed points ⇒ zero segments) are
 represented by one sentinel segment at ``_FAR`` so every ring owns at
 least one slot (``reduceat`` needs non-empty slices): the sentinel is
 provably inert for winding (both endpoints above any query point) and
 for Liang–Barsky (zero-length segment outside every rect), and a
-per-zone ``real_segs`` mask restores the exact ``inf`` distance for
+per-zone ``zone_has_real`` mask restores the exact ``inf`` distance for
 all-degenerate zones.
 """
 
@@ -34,9 +39,68 @@ from __future__ import annotations
 
 import numpy as np
 
-from osm_chordify_spark import geom as G
-
 _FAR = 1e308
+# bound on any expanded (query, segment) array a kernel builds at once
+_CHUNK = 4_000_000
+
+
+def _chunks(cost, chunk=_CHUNK):
+    """Consecutive item slices whose summed expansion ``cost`` stays
+    near ``chunk`` (a slice always holds at least one item)."""
+    csum = np.cumsum(cost)
+    n = len(csum)
+    start = 0
+    while start < n:
+        base = csum[start - 1] if start else 0
+        end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
+        end = min(max(end, start + 1), n)
+        yield slice(start, end)
+        start = end
+
+
+def _csr(cnt):
+    """counts → (offsets, owner of each expanded slot, slot's rank
+    within its owner): the repeat/cumsum CSR expansion."""
+    cnt = np.asarray(cnt, dtype=np.int64)
+    off = np.concatenate(([0], np.cumsum(cnt))).astype(np.int64)
+    owner = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    return off, owner, np.arange(off[-1], dtype=np.int64) - off[owner]
+
+
+def _winding_contrib(AX, AY, BX, BY, X, Y):
+    """Per-(point, segment) winding contribution: the element formula
+    of ``geom.winding_number``."""
+    dx, dy = BX - AX, BY - AY
+    upward = (AY <= Y) & (BY > Y)
+    downward = (AY > Y) & (BY <= Y)
+    cross = dx * (Y - AY) - (X - AX) * dy
+    return (upward & (cross > 0)).astype(np.int64) - (
+        downward & (cross < 0)
+    ).astype(np.int64)
+
+
+def _segment_hits_rect(AX, AY, BX, BY, X0, Y0, X1, Y1):
+    """Per-(segment, rect) Liang–Barsky hit, comparisons identical to
+    ``geom._segs_intersect_rects``."""
+    dx, dy = BX - AX, BY - AY
+    t0 = np.zeros(len(AX))
+    t1 = np.ones(len(AX))
+    ok = np.ones(len(AX), dtype=bool)
+    for p, q in (
+        (-dx, AX - X0),
+        (dx, X1 - AX),
+        (-dy, AY - Y0),
+        (dy, Y1 - AY),
+    ):
+        zero = p == 0
+        ok &= ~(zero & (q < 0))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t = q / np.where(zero, 1.0, p)
+        ent = (~zero) & (p < 0)
+        ext = (~zero) & (p > 0)
+        t0 = np.where(ent, np.maximum(t0, t), t0)
+        t1 = np.where(ext, np.minimum(t1, t), t1)
+    return ok & (t0 <= t1)
 
 
 class FlatZones:
@@ -48,68 +112,51 @@ class FlatZones:
     """
 
     __slots__ = (
-        "n", "seg_ax", "seg_ay", "seg_bx", "seg_by",
+        "seg_ax", "seg_ay", "seg_bx", "seg_by",
         "zone_seg_off", "zone_ring_off", "zone_poly_off",
         "ring_local_seg_off", "ring_is_outer",
         "poly_local_ring_off", "zone_has_real",
     )
 
     def __init__(self, polys_list):
-        ax_parts, ay_parts, bx_parts, by_parts = [], [], [], []
-        zone_seg_off = [0]
-        zone_ring_off = [0]
-        zone_poly_off = [0]
-        ring_local_seg_off = []
-        ring_is_outer = []
-        poly_local_ring_off = []
-        zone_has_real = []
-        sentinel = np.array([_FAR])
-        for polys in polys_list:
-            zseg = 0
-            zring = 0
-            has_real = False
-            if not polys:
-                # empty zone: one sentinel polygon/ring/segment so every
-                # CSR slice is non-empty; winding 0 ⇒ outside, distance
-                # masked to inf by zone_has_real
-                polys = [[np.empty((0, 2))]]
-            for rings in polys:
-                poly_local_ring_off.append(zring)
-                for ri, ring in enumerate(rings):
-                    r = G.ring_close(ring)
-                    ring_local_seg_off.append(zseg)
-                    ring_is_outer.append(ri == 0)
-                    k = len(r) - 1
-                    if k <= 0:
-                        ax_parts.append(sentinel)
-                        ay_parts.append(sentinel)
-                        bx_parts.append(sentinel)
-                        by_parts.append(sentinel)
-                        zseg += 1
-                    else:
-                        ax_parts.append(r[:-1, 0])
-                        ay_parts.append(r[:-1, 1])
-                        bx_parts.append(r[1:, 0])
-                        by_parts.append(r[1:, 1])
-                        zseg += k
-                        has_real = True
-                    zring += 1
-            zone_seg_off.append(zone_seg_off[-1] + zseg)
-            zone_ring_off.append(zone_ring_off[-1] + zring)
-            zone_poly_off.append(zone_poly_off[-1] + len(polys))
-            zone_has_real.append(has_real)
-        self.n = len(zone_has_real)
-        self.seg_ax = np.concatenate(ax_parts) if ax_parts else np.empty(0)
-        self.seg_ay = np.concatenate(ay_parts) if ay_parts else np.empty(0)
-        self.seg_bx = np.concatenate(bx_parts) if bx_parts else np.empty(0)
-        self.seg_by = np.concatenate(by_parts) if by_parts else np.empty(0)
-        self.zone_seg_off = np.asarray(zone_seg_off, dtype=np.int64)
-        self.zone_ring_off = np.asarray(zone_ring_off, dtype=np.int64)
-        self.zone_poly_off = np.asarray(zone_poly_off, dtype=np.int64)
-        self.ring_local_seg_off = np.asarray(ring_local_seg_off, dtype=np.int64)
-        self.ring_is_outer = np.asarray(ring_is_outer, dtype=bool)
-        self.poly_local_ring_off = np.asarray(poly_local_ring_off, dtype=np.int64)
-        self.zone_has_real = np.asarray(zone_has_real, dtype=bool)
+        # an empty zone gets one sentinel polygon/ring/segment so every
+        # CSR slice is non-empty; winding 0 ⇒ outside, distance masked
+        # to inf by zone_has_real
+        polys_list = [polys or [[np.empty((0, 2))]] for polys in polys_list]
+        rings = [np.asarray(r, dtype=np.float64) for polys in polys_list
+                 for rs in polys for r in rs]
+        poly_nring = np.array([len(rs) for polys in polys_list for rs in polys], dtype=np.int64)
+        zone_npoly = np.array([len(polys) for polys in polys_list], dtype=np.int64)
+        lens = np.array([len(r) for r in rings], dtype=np.int64)
+        # one extra point at _FAR: the sentinel segments' endpoints
+        pts = np.concatenate([r[:, :2] for r in rings if len(r)] + [np.full((1, 2), _FAR)])
+        start = np.cumsum(lens) - lens
+        # geom.ring_close: a ring not ending on its first point gets a
+        # closing segment back to it
+        ne = lens > 0
+        opened = np.zeros(len(rings), dtype=bool)
+        opened[ne] = (pts[start[ne]] != pts[start[ne] + lens[ne] - 1]).any(axis=1)
+        nseg = lens - 1 + opened
+        real = nseg > 0
+        seg_off, owner, local = _csr(np.where(real, nseg, 1))
+        ia = start[owner] + local
+        ib = np.where(local + 1 < lens[owner], ia + 1, start[owner])
+        far = ~real[owner]
+        ia[far] = ib[far] = len(pts) - 1
+        self.seg_ax, self.seg_ay = pts[ia, 0], pts[ia, 1]
+        self.seg_bx, self.seg_by = pts[ib, 0], pts[ib, 1]
+
+        poly_ring_off = np.concatenate(([0], np.cumsum(poly_nring))).astype(np.int64)
+        self.zone_poly_off = np.concatenate(([0], np.cumsum(zone_npoly))).astype(np.int64)
+        self.zone_ring_off = poly_ring_off[self.zone_poly_off]
+        self.zone_seg_off = seg_off[self.zone_ring_off]
+        ring_zone = np.repeat(np.arange(len(polys_list)), np.diff(self.zone_ring_off))
+        poly_zone = np.repeat(np.arange(len(polys_list)), zone_npoly)
+        ring_poly = np.repeat(np.arange(len(poly_nring)), poly_nring)
+        self.ring_local_seg_off = seg_off[:-1] - self.zone_seg_off[ring_zone]
+        self.ring_is_outer = np.arange(len(rings)) == poly_ring_off[ring_poly]
+        self.poly_local_ring_off = poly_ring_off[:-1] - self.zone_ring_off[poly_zone]
+        self.zone_has_real = np.bincount(ring_zone, weights=real, minlength=len(polys_list)) > 0
 
     # -- CSR expansion helpers ------------------------------------------
 
@@ -117,50 +164,26 @@ class FlatZones:
         """codes (per query: zone ordinal) → (seg_off, flat_seg_idx,
         rep_query_idx): each query's block is its zone's contiguous
         segment range."""
-        cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        off = np.concatenate(([0], np.cumsum(cnt)))
-        total = int(off[-1])
-        rep = np.repeat(np.arange(len(codes), dtype=np.int64), cnt)
-        flat = (
-            np.arange(total, dtype=np.int64)
-            - np.repeat(off[:-1], cnt)
-            + np.repeat(self.zone_seg_off[codes], cnt)
-        )
-        return off, flat, rep
+        off, rep, local = _csr(self.zone_seg_off[codes + 1] - self.zone_seg_off[codes])
+        return off, self.zone_seg_off[codes][rep] + local, rep
 
     def _inside_from_contrib(self, codes, contrib, off):
         """Per-query inside flag from per-(query, segment) winding
         contributions: ring sums → ring ok (outer: wn != 0, hole:
         wn == 0) → AND per polygon → OR per zone."""
         nq = len(codes)
-        rcnt = self.zone_ring_off[codes + 1] - self.zone_ring_off[codes]
-        roff = np.concatenate(([0], np.cumsum(rcnt)))
-        rtotal = int(roff[-1])
-        ring_flat = (
-            np.arange(rtotal, dtype=np.int64)
-            - np.repeat(roff[:-1], rcnt)
-            + np.repeat(self.zone_ring_off[codes], rcnt)
-        )
-        ring_bounds = (
-            np.repeat(off[:-1], rcnt) + self.ring_local_seg_off[ring_flat]
-        )
-        wn_ring = np.add.reduceat(contrib, ring_bounds) if rtotal else np.empty(0, np.int64)
+        roff, rrep, rlocal = _csr(self.zone_ring_off[codes + 1] - self.zone_ring_off[codes])
+        ring_flat = self.zone_ring_off[codes][rrep] + rlocal
+        ring_bounds = off[rrep] + self.ring_local_seg_off[ring_flat]
+        wn_ring = np.add.reduceat(contrib, ring_bounds) if len(ring_flat) else np.empty(0, np.int64)
         ok_ring = np.where(self.ring_is_outer[ring_flat], wn_ring != 0, wn_ring == 0)
 
-        pcnt = self.zone_poly_off[codes + 1] - self.zone_poly_off[codes]
-        poff = np.concatenate(([0], np.cumsum(pcnt)))
-        ptotal = int(poff[-1])
-        poly_flat = (
-            np.arange(ptotal, dtype=np.int64)
-            - np.repeat(poff[:-1], pcnt)
-            + np.repeat(self.zone_poly_off[codes], pcnt)
-        )
-        poly_bounds = (
-            np.repeat(roff[:-1], pcnt) + self.poly_local_ring_off[poly_flat]
-        )
+        poff, prep, plocal = _csr(self.zone_poly_off[codes + 1] - self.zone_poly_off[codes])
+        poly_flat = self.zone_poly_off[codes][prep] + plocal
+        poly_bounds = roff[prep] + self.poly_local_ring_off[poly_flat]
         inside_poly = (
             np.logical_and.reduceat(ok_ring, poly_bounds)
-            if ptotal
+            if len(poly_flat)
             else np.empty(0, bool)
         )
         inside = (
@@ -170,9 +193,12 @@ class FlatZones:
         )
         return inside
 
+    def _segs(self, flat):
+        return self.seg_ax[flat], self.seg_ay[flat], self.seg_bx[flat], self.seg_by[flat]
+
     # -- public batch kernels -------------------------------------------
 
-    def min_dist_inside(self, codes, qx, qy, chunk: int = 4_000_000):
+    def min_dist_inside(self, codes, qx, qy, chunk: int = _CHUNK):
         """Per (query point, its zone): (min distance to any ring
         segment, inside flag).  Distance is ``inf`` for zones with no
         real segments (matching the per-zone loop's untouched best).
@@ -185,18 +211,10 @@ class FlatZones:
         best = np.empty(nq, dtype=np.float64)
         inside = np.empty(nq, dtype=bool)
         cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        # chunk queries so the expanded arrays stay bounded
-        start = 0
-        csum = np.cumsum(cnt)
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
-            sl = slice(start, end)
+        for sl in _chunks(cnt, chunk):
             off, flat, rep = self._expand(codes[sl])
             X, Y = qx[sl][rep], qy[sl][rep]
-            AX, AY = self.seg_ax[flat], self.seg_ay[flat]
-            BX, BY = self.seg_bx[flat], self.seg_by[flat]
+            AX, AY, BX, BY = self._segs(flat)
             dx, dy = BX - AX, BY - AY
             L2 = dx * dx + dy * dy
             safe = np.where(L2 == 0, 1.0, L2)
@@ -204,107 +222,32 @@ class FlatZones:
             cx, cy = AX + t * dx, AY + t * dy
             d = np.hypot(X - cx, Y - cy)
             b = np.minimum.reduceat(d, off[:-1]) if len(d) else np.empty(0)
-            # winding contribution per (query, segment)
-            upward = (AY <= Y) & (BY > Y)
-            downward = (AY > Y) & (BY <= Y)
-            cross = dx * (Y - AY) - (X - AX) * dy
-            contrib = (upward & (cross > 0)).astype(np.int64) - (
-                downward & (cross < 0)
-            ).astype(np.int64)
+            contrib = _winding_contrib(AX, AY, BX, BY, X, Y)
             ins = self._inside_from_contrib(codes[sl], contrib, off)
             b = np.where(self.zone_has_real[codes[sl]], b, np.inf)
             b[ins] = 0.0
             best[sl] = b
             inside[sl] = ins
-            start = end
         return best, inside
 
-    def inside_points(self, codes, qx, qy, chunk: int = 4_000_000):
+    def inside_points(self, codes, qx, qy, chunk: int = _CHUNK):
         """Per (query point, its zone): point-in-polygon (OR over the
         zone's polygons, holes excluded) — ``geom.point_in_polygon``
         semantics, batched."""
         codes = np.asarray(codes, dtype=np.int64)
         qx = np.asarray(qx, dtype=np.float64)
         qy = np.asarray(qy, dtype=np.float64)
-        nq = len(codes)
-        inside = np.empty(nq, dtype=bool)
+        inside = np.empty(len(codes), dtype=bool)
         cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        csum = np.cumsum(cnt)
-        start = 0
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
-            sl = slice(start, end)
+        for sl in _chunks(cnt, chunk):
             off, flat, rep = self._expand(codes[sl])
-            X, Y = qx[sl][rep], qy[sl][rep]
-            AX, AY = self.seg_ax[flat], self.seg_ay[flat]
-            BX, BY = self.seg_bx[flat], self.seg_by[flat]
-            dx, dy = BX - AX, BY - AY
-            upward = (AY <= Y) & (BY > Y)
-            downward = (AY > Y) & (BY <= Y)
-            cross = dx * (Y - AY) - (X - AX) * dy
-            contrib = (upward & (cross > 0)).astype(np.int64) - (
-                downward & (cross < 0)
-            ).astype(np.int64)
+            contrib = _winding_contrib(*self._segs(flat), qx[sl][rep], qy[sl][rep])
             inside[sl] = self._inside_from_contrib(codes[sl], contrib, off)
-            start = end
         return inside
-
-    def rects_intersect(self, codes, rx0, ry0, rx1, ry1, chunk: int = 4_000_000):
-        """Per (query rect, its zone): does ANY segment of the zone's
-        rings intersect the rect?  Liang–Barsky, comparisons identical
-        to ``geom._segs_intersect_rects``."""
-        codes = np.asarray(codes, dtype=np.int64)
-        rx0 = np.asarray(rx0, dtype=np.float64)
-        ry0 = np.asarray(ry0, dtype=np.float64)
-        rx1 = np.asarray(rx1, dtype=np.float64)
-        ry1 = np.asarray(ry1, dtype=np.float64)
-        nq = len(codes)
-        out = np.empty(nq, dtype=bool)
-        cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        csum = np.cumsum(cnt)
-        start = 0
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
-            sl = slice(start, end)
-            off, flat, rep = self._expand(codes[sl])
-            AX, AY = self.seg_ax[flat], self.seg_ay[flat]
-            BX, BY = self.seg_bx[flat], self.seg_by[flat]
-            dx, dy = BX - AX, BY - AY
-            X0, Y0 = rx0[sl][rep], ry0[sl][rep]
-            X1, Y1 = rx1[sl][rep], ry1[sl][rep]
-            t0 = np.zeros(len(AX))
-            t1 = np.ones(len(AX))
-            ok = np.ones(len(AX), dtype=bool)
-            for p, q in (
-                (-dx, AX - X0),
-                (dx, X1 - AX),
-                (-dy, AY - Y0),
-                (dy, Y1 - AY),
-            ):
-                zero = p == 0
-                ok &= ~(zero & (q < 0))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    t = q / np.where(zero, 1.0, p)
-                ent = (~zero) & (p < 0)
-                ext = (~zero) & (p > 0)
-                t0 = np.where(ent, np.maximum(t0, t), t0)
-                t1 = np.where(ext, np.minimum(t1, t), t1)
-            hit = ok & (t0 <= t1)
-            out[sl] = (
-                np.logical_or.reduceat(hit, off[:-1])
-                if len(hit)
-                else np.zeros(end - start, bool)
-            )
-            start = end
-        return out
 
 
 def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
-                      chunk: int = 4_000_000):
+                      chunk: int = _CHUNK):
     """Exact inside length per (edge, zone) PAIR, batched across zones —
     the cross-zone vectorization of
     ``intersect._exact_clip_edges_vs_zone`` (keep_geometry=False path).
@@ -387,20 +330,12 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
         zone_poly_off[1:] > zone_poly_off[:-1], zone_nseg, 0
     )
     cost = np.maximum(pair_nseg * zone_nseg[zcodes], 1)
-    csum = np.cumsum(cost)
-
-    start = 0
-    while start < npairs:
-        base = csum[start - 1] if start else 0
-        end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-        end = min(max(end, start + 1), npairs)
-        sl = slice(start, end)
+    for sl in _chunks(cost, chunk):
         _clip_chunk(
             totals, sl, ecodes[sl], zcodes[sl],
             eax, eay, eex, eey, eline, eseg_len,
             edge_seg_off, edge_line_off, zone_poly_off, fzp,
         )
-        start = end
     return totals
 
 
@@ -411,42 +346,24 @@ def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
     classify midpoints, accumulate."""
     P = len(ec)
     # tasks: one per (pair, polygon of its zone)
-    tcnt = zone_poly_off[zc + 1] - zone_poly_off[zc]
-    toff = np.concatenate(([0], np.cumsum(tcnt)))
-    T = int(toff[-1])
+    _, task_pair, tlocal = _csr(zone_poly_off[zc + 1] - zone_poly_off[zc])
+    T = len(task_pair)
     if T == 0:
         return
-    task_pair = np.repeat(np.arange(P, dtype=np.int64), tcnt)
-    task_poly = (
-        np.arange(T, dtype=np.int64)
-        - np.repeat(toff[:-1], tcnt)
-        + np.repeat(zone_poly_off[zc], tcnt)
-    )
+    task_poly = zone_poly_off[zc][task_pair] + tlocal
     # task-segments: one per (task, edge segment)
     scnt = edge_seg_off[ec + 1] - edge_seg_off[ec]
-    ts_cnt = scnt[task_pair]
-    ks_off = np.concatenate(([0], np.cumsum(ts_cnt)))
-    K = int(ks_off[-1])
+    _, ks_task, klocal = _csr(scnt[task_pair])
+    K = len(ks_task)
     if K == 0:
         return
-    ks_task = np.repeat(np.arange(T, dtype=np.int64), ts_cnt)
-    ks_seg = (
-        np.arange(K, dtype=np.int64)
-        - np.repeat(ks_off[:-1], ts_cnt)
-        + np.repeat(edge_seg_off[ec[task_pair]], ts_cnt)
-    )
+    ks_seg = edge_seg_off[ec[task_pair]][ks_task] + klocal
     AX, AY = eax[ks_seg], eay[ks_seg]
     EX, EY = eex[ks_seg], eey[ks_seg]
     # cross expansion: per (task-seg, poly ring edge)
     rcnt = (fzp.zone_seg_off[task_poly + 1] - fzp.zone_seg_off[task_poly])[ks_task]
-    xoff = np.concatenate(([0], np.cumsum(rcnt)))
-    X = int(xoff[-1])
-    cross_k = np.repeat(np.arange(K, dtype=np.int64), rcnt)
-    cross_pe = (
-        np.arange(X, dtype=np.int64)
-        - np.repeat(xoff[:-1], rcnt)
-        + np.repeat(fzp.zone_seg_off[task_poly][ks_task], rcnt)
-    )
+    _, cross_k, xlocal = _csr(rcnt)
+    cross_pe = fzp.zone_seg_off[task_poly][ks_task][cross_k] + xlocal
     cx, cy = fzp.seg_ax[cross_pe], fzp.seg_ay[cross_pe]
     dxr = fzp.seg_bx[cross_pe] - cx
     dyr = fzp.seg_by[cross_pe] - cy
@@ -525,11 +442,17 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
        ``pick_cover_res`` (replicating its floor arithmetic), min-reduced
        per zone;
     3. bbox cover enumeration at the zone resolution via CSR expansion;
-    4. crossing classification: Liang–Barsky over (cell, zone segments)
-       pairs (``FlatZones.rects_intersect``);
+    4. crossing classification: Liang–Barsky over (segment, cell)
+       pairs, each segment paired only with the cells of its bbox cell
+       range padded by one cell and clipped to its polygon's cover (a
+       pair outside that range is a full cell apart: never a hit);
     5. full classification: winding test of the cell's (x0, y0) corner
        for non-crossing cells only — identical corner choice to
-       ``zone_cover_cells``;
+       ``zone_cover_cells``.  A cover row's corners share one y0, so
+       each (polygon, row) first lists the segments spanning that y0
+       (padded row range, then the exact upward/downward test); the
+       cross sign runs on (cell, spanning segment) pairs only, summed
+       per ring in integers (a non-spanning segment contributes 0);
     6. (zone, cell) dedupe across a zone's polygons with OR(full).
     """
     from osm_chordify_spark import cellindex as ci
@@ -578,13 +501,6 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
         by0[nz] = np.minimum.reduceat(allpts[:, 1], starts)
         bx1[nz] = np.maximum.reduceat(allpts[:, 0], starts)
         by1[nz] = np.maximum.reduceat(allpts[:, 1], starts)
-        # reduceat slices run to the NEXT start, which skips empty outers
-        # between non-empty ones; recompute exactly per non-empty block
-        if not nz.all():
-            for i in np.nonzero(nz)[0]:
-                o = outers[i]
-                bx0[i], by0[i] = o[:, 0].min(), o[:, 1].min()
-                bx1[i], by1[i] = o[:, 0].max(), o[:, 1].max()
 
     # ---- per-polygon cover res (pick_cover_res floor arithmetic) ------
     poly_res = np.full(len(outers), -1, dtype=np.int64)
@@ -625,9 +541,8 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
     empty_poly = ~nz
     ncx = np.where(empty_poly, 0, gx1 - gx0 + 1)
     ncy = np.where(empty_poly, 0, gy1 - gy0 + 1)
-    counts = ncx * ncy
-    coff = np.concatenate(([0], np.cumsum(counts)))
-    total = int(coff[-1])
+    coff, cell_poly, local = _csr(ncx * ncy)
+    total = len(cell_poly)
     if return_bbox:
         zbx0 = np.full(n_zones, np.inf)
         zby0 = np.full(n_zones, np.inf)
@@ -640,31 +555,99 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
         zbbox = (zbx0, zby0, zbx1, zby1)
     if total == 0:
         return _empty()
-    cell_poly = np.repeat(np.arange(len(outers), dtype=np.int64), counts)
-    local = np.arange(total, dtype=np.int64) - np.repeat(coff[:-1], counts)
     ny = ncy[cell_poly]
     ix = gx0[cell_poly] + local // ny
     iy = gy0[cell_poly] + local % ny
     cells = ci.make_cell(pres[cell_poly], ix, iy)
 
-    # ---- classification ----------------------------------------------
+    # ---- classification, one polygon at a time -------------------------
     # FlatZones over the POLYGONS (each polygon classified independently,
     # exactly as zone_cover_cells' per-polygon loop)
     fz = FlatZones([[rings] for rings in poly_rings])
     cx0, cy0, cx1, cy1 = ci.cell_bounds(cells, world)
-    crossing = fz.rects_intersect(cell_poly, cx0, cy0, cx1, cy1)
+    ring_poly = np.repeat(np.arange(len(outers), dtype=np.int64), np.diff(fz.zone_ring_off))
+    ring_start = fz.zone_seg_off[ring_poly] + fz.ring_local_seg_off
+    seg_ring = np.searchsorted(ring_start, np.arange(len(fz.seg_ax)), side="right") - 1
+    # real segments only: the _FAR sentinels never hit a cell or span a row
+    far = (fz.seg_ax == _FAR) & (fz.seg_ay == _FAR) & (fz.seg_bx == _FAR) & (fz.seg_by == _FAR)
+    sid = np.nonzero(~far)[0]
+    sp = ring_poly[seg_ring[sid]]
+    ax, ay, bx, by = fz._segs(sid)
+
+    def _padded(lo_v, hi_v, w0, w1, g0, g1):
+        n = npow[sp]
+        lo = np.clip(np.floor((lo_v - w0) / (w1 - w0) * n), 0, n - 1).astype(np.int64) - 1
+        hi = np.clip(np.floor((hi_v - w0) / (w1 - w0) * n), 0, n - 1).astype(np.int64) + 1
+        lo = np.maximum(lo, g0[sp])
+        return lo, np.where(nz[sp], np.maximum(np.minimum(hi, g1[sp]) - lo + 1, 0), 0)
+
+    sx, snx = _padded(np.minimum(ax, bx), np.maximum(ax, bx), wx0, wx1, gx0, gx1)
+    sy, sny = _padded(np.minimum(ay, by), np.maximum(ay, by), wy0, wy1, gy0, gy1)
+
+    # per segment: cover index of its first padded row's cell in the
+    # polygon's first column (cells run column-major, ncy per column),
+    # of its first padded cell, and the (polygon, row) id of that row
+    stride = ncy[sp]
+    row_cell = coff[sp] + sy - gy0[sp]
+    first_cell = row_cell + (sx - gx0[sp]) * stride
+    row_off = np.concatenate(([0], np.cumsum(ncy)))
+    first_row = row_off[sp] + sy - gy0[sp]
+
+    # step 4: crossing cells from (segment, padded-range cell) pairs
+    crossing = np.zeros(total, dtype=bool)
+    for sl in _chunks(snx * sny):
+        _, rep, local = _csr((snx * sny)[sl])
+        q = sl.start + rep
+        ny = sny[q]
+        k = first_cell[q] + local // ny * stride[q] + local % ny
+        hit = _segment_hits_rect(ax[q], ay[q], bx[q], by[q], cx0[k], cy0[k], cx1[k], cy1[k])
+        crossing[k[hit]] = True
+
+    # step 5a: the segments spanning each (polygon, row)'s corner y0
+    span_seg, span_row = [], []
+    for sl in _chunks(sny):
+        _, rep, local = _csr(sny[sl])
+        q = sl.start + rep
+        Y = cy0[row_cell[q] + local]
+        span = ((ay[q] <= Y) & (by[q] > Y)) | ((ay[q] > Y) & (by[q] <= Y))
+        span_seg.append(sid[q[span]])
+        span_row.append((first_row[q] + local)[span])
+    span_row = np.concatenate(span_row or [np.empty(0, np.int64)])
+    # stable: a row's segments stay in ring order, so each (cell, ring)
+    # run below is contiguous
+    span_seg = np.concatenate(span_seg or [span_row])[np.argsort(span_row, kind="stable")]
+    row_cnt = np.bincount(span_row, minlength=int(row_off[-1]))
+    row_first = np.concatenate(([0], np.cumsum(row_cnt)))
+
+    # step 5b: winding sums over (non-crossing cell, spanning segment)
     full = np.zeros(total, dtype=bool)
     ncross = np.nonzero(~crossing)[0]
-    if len(ncross):
-        full[ncross] = fz.inside_points(cell_poly[ncross], cx0[ncross], cy0[ncross])
+    p = cell_poly[ncross]
+    crow = row_off[p] + iy[ncross] - gy0[p]
+    for sl in _chunks(row_cnt[crow]):
+        _, rep, local = _csr(row_cnt[crow[sl]])
+        c = ncross[sl][rep]
+        seg = span_seg[row_first[crow[sl][rep]] + local]
+        contrib = _winding_contrib(*fz._segs(seg), cx0[c], cy0[c])
+        ring = seg_ring[seg]
+        first = np.ones(len(c), dtype=bool)
+        first[1:] = (c[1:] != c[:-1]) | (ring[1:] != ring[:-1])
+        starts = np.nonzero(first)[0]
+        if not len(starts):
+            continue
+        wn = np.add.reduceat(contrib, starts) != 0
+        gc, outer = c[starts], fz.ring_is_outer[ring[starts]]
+        # inside ⇔ outer ring wn != 0 and every hole's wn == 0
+        full[gc[outer & wn]] = True
+        full[gc[~outer & wn]] = False
     kept = crossing | full
 
     zidx = poly_zone[cell_poly[kept]]
     kcells = cells[kept]
     kfull = full[kept]
     # ---- per-zone (cell, full-OR) dedupe across polygons --------------
-    # single-polygon zones (the overwhelmingly common case) need none
-    if len(outers) > n_zones:
+    # zones of one polygon (the overwhelmingly common case) need none
+    if np.bincount(poly_zone, minlength=n_zones).max() > 1:
         order = np.lexsort((kcells, zidx))
         zidx, kcells, kfull = zidx[order], kcells[order], kfull[order]
         first = np.ones(len(zidx), dtype=bool)
@@ -681,4 +664,4 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
         out.append(zbbox)
     if return_res:
         out.append(zone_res)
-    return tuple(out) if len(out) > 3 else (zidx, kcells, kfull)
+    return tuple(out)

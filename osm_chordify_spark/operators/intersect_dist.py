@@ -9,8 +9,8 @@ intersect.py:586-884) as a pure DataFrame program:
 
 1. zones explode to (cell, zone, full) rows at the effective index
    resolution — the broadcast index's rows, as a table
-   (``zoneindex.zone_cover_cells`` is shared, so the candidate sets are
-   byte-identical by construction);
+   (``geom_batch.zone_cover_cells_batch`` is shared, so the candidate
+   sets are byte-identical by construction);
 2. edges explode to (edge, cell) cover rows;
 3. candidates come from a plain **cell equi-join** + groupBy(edge, zone)
    — Catalyst plans it as a shuffled hash join AQE can skew-split;
@@ -209,9 +209,9 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
     equi-join + containment aggregate.
 
     Mixed-resolution covers (round 4): each zone's cover lives at its
-    OWN over-cover-guarded resolution (``ZI.zone_min_res`` per zone —
-    the same per-zone classification ``ZoneIndex.build`` uses, so the
-    two paths stay candidate-identical).  The edge side explodes its
+    OWN over-cover-guarded resolution (``zone_cover_cells_batch`` —
+    the same classification ``ZoneIndex.build`` uses, so the two paths
+    stay candidate-identical).  The edge side explodes its
     bbox cover once per OCCUPIED resolution; since the equi-join key
     carries the resolution in its high bits, an (edge, zone) group only
     ever sees rows at the zone's resolution, so the containment

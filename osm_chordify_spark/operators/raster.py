@@ -816,7 +816,7 @@ def zonal_stats_dist(
     """``zonal_stats`` over a DataFrame zone table too large to
     broadcast (the same dispatch story as
     ``intersect_dist.intersect_lines_with_zones_dist``): zones explode
-    to (cell, zone, full) rows via the SAME ``zone_cover_cells``
+    to (cell, zone, full) rows via the SAME ``zone_cover_cells_batch``
     classification the broadcast index uses, raster cell centers map to
     index cells in pure codegen, candidates come from a cell equi-join,
     full cells skip the exact test, and only partial-cell candidates

@@ -60,25 +60,16 @@ def zone_cover_cells(polys, res: int, world=ci.WORLD,
                      max_cells_per_zone: int = 4096) -> dict:
     """cell → full flag for ONE zone's polygons at ``res``: bbox cover,
     drop cells whose rect provably misses the polygon, mark cells whose
-    rect is entirely inside (the containment fast path).  The single
-    source of truth for candidate-cell classification — ZoneIndex.build
-    and the distributed path both call this, so their candidate sets are
-    byte-identical by construction.
+    rect is entirely inside (the containment fast path).  The per-zone
+    reference classification: ``geom_batch.zone_cover_cells_batch``,
+    which ZoneIndex.build and the distributed operators call, must
+    reproduce it exactly (parity pinned in tests).
 
-    Classification is vectorized ACROSS the zone's cover cells (round
-    4): one broadcast Liang–Barsky over (boundary-local segments ×
-    cells) finds crossing cells, and one point-in-polygon over a
-    SINGLE corner per non-crossing cell decides the rest — when no
-    segment intersects a cell's rect, the winding number is constant
-    over the whole rect, so one corner carries the original
-    all-corners/any-corner semantics exactly.  This replaces the
-    per-cell Python loop whose small-NumPy-call overhead (~2.3 ms/zone
-    for a 4-vertex tract, ~9 cells) was the dominant fixed cost of the
-    distributed zone operators at 10⁵ zones.  Cells are chunked so the
-    (S × K) broadcast stays under ~2M entries; per-chunk segment-bbox
-    prefiltering (inside segments_intersect_rects) keeps 10⁴⁺-vertex
-    rings cheap.  Kept/full classification is identical to the old
-    per-cell logic (parity pinned in tests)."""
+    A cell is crossing if any ring segment intersects its rect
+    (Liang–Barsky); a non-crossing cell has a constant winding number
+    over its rect, so its (x0, y0) corner alone decides whether it is
+    full.  Cells are chunked so the (segments × cells) broadcast stays
+    under ~2M entries."""
     seen: dict = {}
     for rings in polys:
         x0, y0, x1, y1 = G.polygon_bbox(rings)

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from osm_chordify_spark import get_spark
@@ -8,7 +10,10 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # one local core per CPU this host grants; shuffle partitions follow
+    # the package's own rule
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = get_spark(app_name="tests", master=f"local[{cpus}]")
     yield s
     s.stop()
 
